@@ -791,9 +791,9 @@ def main() -> None:
     # one broadcast join + one shuffled agg per post; a sublinear
     # entries/s drop means a new scale bound crept in). Both points
     # measure the PLAN through a noop sink (executor-side, like the
-    # sharded keyed-JSON production path); the human-scale document
-    # mode's driver collect is deliberately not in this wall — it is
-    # the documented non-scale path.
+    # line-oriented ``df.write.json`` fact-scale path); the keyed-JSON
+    # document's single driver collect is deliberately not in this wall —
+    # it is the documented human-scale path.
     tier_posts_slope = int(os.environ.get("SPARK_GRAFT_POSTS_SLOPE", "1000000"))
     if tier_posts > 0 and tier_posts_slope > 0:
         result["posts_tier_slope"] = posts_tier(spark, tier_posts_slope)

@@ -6,13 +6,8 @@ import io
 import json
 import logging
 
-from pyspark.sql import functions as F
-
 from wordpress_sql_to_contentstack_exporter_spark.config import ExportConfig, build_catalog
-from wordpress_sql_to_contentstack_exporter_spark.logging_utils import (
-    JsonFormatter,
-    observe_stage,
-)
+from wordpress_sql_to_contentstack_exporter_spark.logging_utils import JsonFormatter
 
 
 def test_config_roundtrip(tmp_path):
@@ -83,13 +78,6 @@ def test_json_log_format():
     assert doc["message"] == "exported post '16'"
     assert doc["metrics"] == {"rows": 3}
     assert doc["timestamp"].endswith("Z")
-
-
-def test_observe_stage_metrics(spark):
-    df = spark.createDataFrame([(1,), (2,), (3,)], "x long")
-    observed, obs = observe_stage(df, "mystage", F.sum("x").alias("sum_x"))
-    observed.write.format("noop").mode("overwrite").save()
-    assert obs.get == {"rows": 3, "sum_x": 6}
 
 
 def test_cli_locale_threads_into_paths_and_master(spark, tmp_path):

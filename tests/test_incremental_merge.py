@@ -5,58 +5,72 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from wordpress_sql_to_contentstack_exporter_spark.plans.validate import from_contenttype_json
-from wordpress_sql_to_contentstack_exporter_spark.sinks import merge_keyed_json, write_keyed_json
+from wordpress_sql_to_contentstack_exporter_spark.sinks import (
+    keyed_json,
+    write_dlq,
+    write_keyed_json,
+    write_master_mapping,
+)
 from wordpress_sql_to_contentstack_exporter_spark.streaming import incremental_export
 
 
 def test_merge_keyed_json_overwrites_and_keeps(spark, tmp_path):
     path = str(tmp_path / "en-us.json")
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    merge_keyed_json(df1, F.col("id"), F.struct(F.col("v")), path)
+    write_keyed_json(df1, F.col("id"), F.struct(F.col("v")), path, merge=True)
     df2 = spark.createDataFrame([(2, "B"), (3, "c")], "id long, v string")
-    merge_keyed_json(df2, F.col("id"), F.struct(F.col("v")), path)
+    written = write_keyed_json(df2, F.col("id"), F.struct(F.col("v")), path, merge=True)
+    assert written == {"2": {"v": "B"}, "3": {"v": "c"}}  # this run's entries only
     doc = json.loads(open(path).read())
     assert doc == {"1": {"v": "a"}, "2": {"v": "B"}, "3": {"v": "c"}}
 
 
-def test_sharded_keyed_json_equivalent_to_document_mode(spark, tmp_path):
-    """VERDICT r4 ask #8: the fact-scale escape hatch. Sharded mode (no
-    driver collect — executors render + range-sort entries, the packager
-    streams shard files) must produce a document that parses identically
-    to the human-scale mode, including JSON-escaping hazards in keys and
-    values, null fields, and unicode."""
-    from wordpress_sql_to_contentstack_exporter_spark.sinks.keyed_json import write_keyed_json
-
-    rows = [(i, f'v "quoted" é{i}' if i % 3 else None, i * 2) for i in range(200)]
-    df = spark.createDataFrame(rows, "id long, v string, n long")
-    entry = F.struct(F.col("v"), F.col("n"))
-    doc_path, shard_path = str(tmp_path / "doc.json"), str(tmp_path / "sharded.json")
-    write_keyed_json(df, F.col("id"), entry, doc_path)
-    write_keyed_json(df, F.col("id"), entry, shard_path, mode="sharded")
-    doc = json.loads(open(doc_path).read())
-    sharded = json.loads(open(shard_path).read())
-    assert sharded == doc and len(sharded) == 200
-    # entries in the sharded document are in key order (the range sort)
-    keys = list(sharded.keys())
-    assert keys == sorted(keys)
-    # no shard directory left behind
-    assert not (tmp_path / "sharded.json.shards").exists()
+def test_keyed_json_document_bytes(spark, tmp_path):
+    """The document format: keys sorted as strings, ``indent=4``, ASCII
+    escaping, null fields dropped; an empty frame writes ``{}``."""
+    df = spark.createDataFrame([(10, 'v "q" é', None), (2, None, 4)], "id long, v string, n long")
+    path = str(tmp_path / "doc.json")
+    written = write_keyed_json(df, F.col("id"), F.struct("v", "n"), path)
+    assert written == {"10": {"v": 'v "q" é'}, "2": {"n": 4}}
+    assert open(path).read() == (
+        '{\n    "10": {\n        "v": "v \\"q\\" \\u00e9"\n    },\n'
+        '    "2": {\n        "n": 4\n    }\n}'
+    )
+    empty = spark.createDataFrame([], "id long, v string")
+    assert write_keyed_json(empty, F.col("id"), F.struct("v"), path) == {}
+    assert open(path).read() == "{}"
 
 
-def test_sharded_keyed_json_empty_and_bad_mode(spark, tmp_path):
-    from wordpress_sql_to_contentstack_exporter_spark.sinks.keyed_json import write_keyed_json
+@pytest.mark.parametrize("sink", ["entries", "master", "dlq"])
+def test_failed_render_keeps_prior_document(spark, tmp_path, monkeypatch, sink):
+    """A merge that fails while rendering must leave the prior document
+    byte-identical and no temp file behind: the prior entries are what
+    the merge exists to protect."""
+    path = str(tmp_path / "doc.json")
+    rows = spark.createDataFrame([(1, "a"), (2, "b")], "id long, error string")
+    write = {
+        "entries": lambda: write_keyed_json(
+            rows, F.col("id"), F.struct("error"), path, merge=True
+        ),
+        "master": lambda: write_master_mapping(["1", "2"], path, merge=True),
+        "dlq": lambda: write_dlq(rows, path, succeeded=["1"]),
+    }[sink]
+    write()
+    before = open(path, "rb").read()
+    assert json.loads(before)
 
-    import pytest
+    def boom(*args, **kwargs):
+        raise RuntimeError("render failed")
 
-    df = spark.createDataFrame([], "id long, v string")
-    path = str(tmp_path / "empty.json")
-    write_keyed_json(df, F.col("id"), F.struct(F.col("v")), path, mode="sharded")
-    assert json.loads(open(path).read()) == {}
-    with pytest.raises(ValueError, match="unknown mode"):
-        write_keyed_json(df, F.col("id"), F.struct(F.col("v")), path, mode="gzip")
+    monkeypatch.setattr(keyed_json.json, "dumps", boom)
+    with pytest.raises(RuntimeError, match="render failed"):
+        write()
+    assert open(path, "rb").read() == before
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["doc.json"]
 
 
 def test_streaming_incremental_posts_merge(spark, tmp_path):
@@ -70,7 +84,7 @@ def test_streaming_incremental_posts_merge(spark, tmp_path):
 
     def batch_fn(df, batch_id):
         entry = F.struct(F.col("post_title").alias("title"), F.col("ID").alias("uid"))
-        merge_keyed_json(df, F.col("ID"), entry, out_path)
+        write_keyed_json(df, F.col("ID"), entry, out_path, merge=True)
 
     spark.createDataFrame([(1, "first")], schema).write.parquet(str(inp / "f1"))
     incremental_export(spark, f"{inp}/*", spark.createDataFrame([], schema).schema,
@@ -114,9 +128,9 @@ def test_posts_export_sharded_gate_consistent_with_flagship_and_writer(
     """The r15 gate's per-shard manifest must account for EXACTLY the
     flagship entries (sum of n_entries == flagship row count, ids
     cover the same range), and the bytes it checksums are the same
-    rendered entries the real sharded writer emits: writing the
-    flagship through write_keyed_json(mode='sharded') produces a
-    document whose entry count equals the gate's total."""
+    rendered entries the keyed-JSON writer collects: writing the
+    flagship through write_keyed_json produces a document whose entry
+    count equals the flagship row count."""
     import json
 
     from wordpress_sql_to_contentstack_exporter_spark.plans.registry import SPARK_QUERIES
@@ -138,14 +152,13 @@ def test_posts_export_sharded_gate_consistent_with_flagship_and_writer(
     assert min(r["min_id"] for r in shards) == renderable.agg(
         F.min("order_id")
     ).first()[0]
-    # the real no-collect writer round-trips the same entry set
+    # the keyed-JSON writer round-trips the same entry set
     path = str(tmp_path / "posts.json")
-    write_keyed_json(
+    written = write_keyed_json(
         flag,
         F.col("order_id"),
         F.struct("order_id", "author", "date_iso", "url", "flags"),
         path,
-        mode="sharded",
     )
     doc = json.loads(open(path).read())
-    assert len(doc) == n_flag
+    assert len(doc) == len(written) == n_flag

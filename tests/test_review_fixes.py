@@ -132,8 +132,7 @@ def test_dlq_merge_semantics(spark, tmp_path):
     write_dlq(f1, path)
     # next run: 21 untouched, 30 succeeds, 31 newly fails
     f2 = spark.createDataFrame([(31, "err-c")], "id long, error string")
-    ok = spark.createDataFrame([(30,)], "id long")
-    write_dlq(f2, path, succeeded=ok)
+    assert write_dlq(f2, path, succeeded=["30"]) == {"31": "err-c"}
     import json
 
     doc = json.loads(open(path).read())
@@ -173,7 +172,7 @@ def test_hyperplane_signature_32_planes_no_overflow(spark):
 # --- round-2 adversarial-review fixes ---
 
 
-def test_master_merge_preserves_other_locales(spark, tmp_path):
+def test_master_merge_preserves_other_locales(tmp_path):
     """A locale-B subset merge must not clobber locale A's mapping (the
     clobber became reachable once locale was configurable)."""
     import json
@@ -183,10 +182,8 @@ def test_master_merge_preserves_other_locales(spark, tmp_path):
     )
 
     path = str(tmp_path / "posts.json")
-    en = spark.createDataFrame([("10",), ("11",)], "k string")
-    write_master_mapping(en, F.col("k"), path, locale="en-us")
-    fr = spark.createDataFrame([("10",)], "k string")
-    write_master_mapping(fr, F.col("k"), path, locale="fr-fr", merge=True)
+    write_master_mapping(["11", "10"], path, locale="en-us")
+    write_master_mapping(["10"], path, locale="fr-fr", merge=True)
     doc = json.loads(open(path).read())
     assert doc == {"en-us": {"10": "", "11": ""}, "fr-fr": {"10": ""}}
 
@@ -345,3 +342,38 @@ def test_multiplicity_expansion_chunks_large_counts(spark):
     counts = {r["k"]: r["n"] for r in out.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert counts == {7: n, 8: 1}
     assert out.columns == ["k"]
+
+
+@pytest.mark.parametrize("tz", [None, "UTC"])
+def test_session_gap_counts_fractional_seconds(spark, tmp_path, tz):
+    """10.5 s -> 1810.7 s is a 1800.2 s gap: over the 30-min rule, though
+    it truncates to 1800 whole seconds. Spark must split the session
+    exactly where the DuckDB oracles (fractional ``epoch()``) do, for
+    TIMESTAMP and TIMESTAMP_NTZ columns alike."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from wordpress_sql_to_contentstack_exporter_spark.plans.registry import (
+        ORACLE_SQL,
+        SPARK_QUERIES,
+    )
+
+    events = [(1, 10.5, "view"), (1, 1810.7, "click"), (1, 3000.0, "buy"),
+              (2, 100.0, "view"), (2, 1900.0, "click")]  # user 2: exactly 1800 s
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(events)), pa.int64()),
+        "user_id": pa.array([u for u, _, _ in events], pa.int64()),
+        "event_type": [e for _, _, e in events],
+        "ts": pa.array([round(t * 1e6) for _, t, _ in events], pa.timestamp("us", tz=tz)),
+    }), str(tmp_path / "events.parquet"))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+
+    sessions = SPARK_QUERIES["sessionize"](spark, str(tmp_path)).collect()
+    got = sorted((r["user_id"], r["session_id"], r["n_events"]) for r in sessions)
+    want = sorted(r[:3] for r in con.execute(ORACLE_SQL["sessionize"]).fetchall())
+    assert got == want == [(1, 1, 1), (1, 2, 2), (2, 1, 2)]
+    paths = sorted(tuple(r) for r in SPARK_QUERIES["session_paths"](spark, str(tmp_path)).collect())
+    want_paths = sorted(con.execute(ORACLE_SQL["session_paths"]).fetchall())
+    assert paths == want_paths == [("click>buy", 1), ("view", 1), ("view>click", 1)]

@@ -271,3 +271,67 @@ def test_full_export_via_jdbc_catalog_matches_parquet_path(spark, wp_catalog, tm
             assert json.loads(via_jdbc[rel]) == json.loads(gold[rel]), rel
         else:
             assert via_jdbc[rel] == gold[rel], rel
+
+
+def test_one_spark_action_per_export_module(spark, wp_catalog, tmp_path, monkeypatch):
+    """Entries, master, DLQ and the logged row count of a module come from
+    one materialization: the sink collects each content module's plan
+    once, the master writer runs no Spark action, assets collect at most
+    twice after the download checkpoint, and the CLI counts nothing."""
+    import logging
+
+    from wordpress_sql_to_contentstack_exporter_spark import config
+    from wordpress_sql_to_contentstack_exporter_spark.__main__ import main
+    from wordpress_sql_to_contentstack_exporter_spark.logging_utils import get_logger
+
+    calls = []
+    phase = ["builder"]
+    cls = type(spark.range(0))  # the session's concrete DataFrame class
+    for name in ("collect", "count", "toLocalIterator", "localCheckpoint"):
+        def spy(self, *args, _orig=getattr(cls, name), _name=name, **kwargs):
+            calls.append((phase[-1], _name))
+            return _orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, name, spy)
+    for name in ("_write_entries", "write_master_mapping", "write_dlq"):
+        def in_phase(*args, _fn=getattr(pl, name), _name=name, **kwargs):
+            phase.append(_name)
+            try:
+                return _fn(*args, **kwargs)
+            finally:
+                phase.pop()
+
+        monkeypatch.setattr(pl, name, in_phase)
+    records = []
+    handler = logging.Handler()
+    handler.emit = records.append
+    get_logger().addHandler(handler)
+    try:
+        data = str(tmp_path / "data")
+        for m in ("posts", "authors", "categories"):
+            calls.clear()
+            getattr(pl, f"export_{m}")(wp_catalog, data)
+            sink_calls = [c for c in calls if c[0] != "builder"]
+            assert sink_calls == [("_write_entries", "collect")], m
+
+        calls.clear()
+        pl.export_assets(wp_catalog, data, fetch=fake_fetch)
+        after = calls[calls.index(("builder", "localCheckpoint")) + 1:]
+        assert [n for _, n in after] == ["collect", "collect"]
+        assert not any(p == "write_master_mapping" for p, _ in calls)
+
+        cfg_path = tmp_path / "cfg.json"
+        cfg_path.write_text(json.dumps({"data_dir": str(tmp_path / "cli")}))
+        monkeypatch.setattr(config, "build_catalog", lambda spark, cfg: wp_catalog)
+        calls.clear()
+        assert main(["export", "--config", str(cfg_path), "--module", "posts"]) == 0
+        assert not any(n == "count" for _, n in calls)
+    finally:
+        get_logger().removeHandler(handler)
+    rows = {r.getMessage(): r.metrics["rows"] for r in records if hasattr(r, "metrics")}
+    assert rows == {
+        "exported module posts": 2,
+        "exported module authors": 2,
+        "exported module categories": 3,
+        "exported module assets": 2,  # one downloaded, one dead-lettered
+    }

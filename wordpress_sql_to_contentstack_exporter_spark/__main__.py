@@ -117,7 +117,7 @@ def main(argv: list[str] | None = None) -> int:
     cat = build_catalog(spark, cfg)
     ids = read_id_list(spark, args.ids_file) if args.ids_file else None
     modules = [args.module] if args.module else None
-    results = run_export(
+    run_export(
         cat,
         cfg.data_dir,
         modules=modules,
@@ -127,8 +127,6 @@ def main(argv: list[str] | None = None) -> int:
         http_timeout_s=cfg.http_timeout_s,
         http_retries=cfg.http_retries,
     )
-    for mod, df in results.items():
-        logger.info("exported module %s", mod, extra={"metrics": {"rows": df.count()}})
     logger.info("Data exporting has been completed")  # app.js:40-43
     return 0
 

@@ -1,11 +1,11 @@
-"""Structured JSON logging + per-stage metrics (SURVEY.md §2 row 47).
+"""Structured JSON logging (SURVEY.md §2 row 47).
 
 The reference uses winston JSON loggers with success/error/warn channels
 and per-entity lines (logger.js:46-100, "exported post '16'"). Per-entity
 logging is an anti-pattern at 100 TB (a log write per row); the engine
-logs per-stage counts instead, collected for free via
-``DataFrame.observe`` — metrics ride the action that already runs, no
-extra pass over the data.
+logs one line per export module instead, with the row count taken from
+the collect that wrote the module's documents — no extra pass over the
+data.
 """
 
 from __future__ import annotations
@@ -14,9 +14,6 @@ import json
 import logging
 import sys
 import time
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 
 class JsonFormatter(logging.Formatter):
@@ -46,20 +43,3 @@ def get_logger(name: str = "wordpress_sql_to_contentstack_exporter_spark", strea
         logger.setLevel(logging.INFO)
         logger.propagate = False
     return logger
-
-
-def observe_stage(df: DataFrame, stage: str, *extra: Column):
-    """Attach named observation metrics (row count + optional aggregates).
-
-    Returns ``(df, observation)``; after any action on ``df``,
-    ``observation.get`` holds the metrics dict. Rides the existing action —
-    no extra pass.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(stage)
-    return df.observe(obs, F.count(F.lit(1)).alias("rows"), *extra), obs
-
-
-def log_stage(logger: logging.Logger, stage: str, observation) -> None:
-    logger.info("stage %s complete", stage, extra={"metrics": observation.get})

@@ -1006,49 +1006,6 @@ def _unit_vector(vec):
     return _let(_as_double(vec), body)
 
 
-def build_semdedup_manifest(
-    vectors: DataFrame,
-    *,
-    centers,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    max_cell_rows: int = 500_000,
-    run_id: str | None = None,
-) -> DataFrame:
-    """Bootstrap the semantic-dedup manifest: SemDeDup the initial
-    corpus under PREFIT ``centers`` (persist them with
-    ``similarity.save_ann_index`` — the cell layout is part of the
-    manifest's identity; see ``semdedup(centers=...)``) and emit one
-    manifest row per survivor: (vec_id, cell, unit vector). Unit
-    vectors are stored so the daily probe is a plain dot product —
-    ~8·dim bytes per kept row, text/payload never stored.
-    """
-    from . import similarity as sim
-
-    kept = sim.semdedup(
-        vectors,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_cells=len(centers),
-        threshold=threshold,
-        max_cell_rows=max_cell_rows,
-        centers=centers,
-    ).filter(F.col("keep"))
-    return (
-        vectors.select(
-            F.col(id_col).alias("vec_id"), _unit_vector(F.col(vec_col)).alias("unit")
-        )
-        .join(kept.select(F.col(id_col).alias("vec_id"), "cell"), "vec_id")
-        .select(
-            "vec_id",
-            "cell",
-            "unit",
-            F.lit(run_id).cast("string").alias("first_seen_run"),
-        )
-    )
-
-
 def read_semdedup_manifest(spark: SparkSession, path: str) -> DataFrame:
     """Load the semantic manifest, snapshot-pinned for the same
     read-probe-append reason as ``read_manifest`` (a post-append

@@ -16,29 +16,28 @@ Output layout mirrors config/index.json:5-27:
     <data>/master/wp_assets.json          {uid: ""}
     <data>/master/wp_urls.json            {url: ""}   (masterfile of assets)
     <data>/master/wp_failed.json          DLQ {id: error}
+
+Each module runs ONE Spark action for its documents: the keyed entries
+document is assembled on the driver from one ``collect`` of rendered
+entries, and the master mapping, the DLQ clearing and the module's logged
+row count are all derived from what that collect returned (assets add one
+more collect, of the failures, for the DLQ). Entries, master and DLQ thus
+come from a single materialization and cannot disagree. These documents
+are human-scale; fact-scale output is line-oriented ``df.write.json``.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..logging_utils import get_logger
 from ..sinks.dlq import write_dlq
-from ..sinks.keyed_json import merge_keyed_json, write_keyed_json, write_master_mapping
-
-
-def _write_entries(df, key, value, path: str, *, partial: bool) -> None:
-    """Full runs rewrite the document; ids-subset runs merge into it
-    (the reference read-modify-writes every page — clobbering on a
-    resume/DLQ re-drive would destroy all other entries)."""
-    if partial:
-        merge_keyed_json(df, key, value, path)
-    else:
-        write_keyed_json(df, key, value, path)
+from ..sinks.keyed_json import write_keyed_json as _write_entries
+from ..sinks.keyed_json import write_master_mapping
 from ..sources.catalog import Catalog
 from ..sources.http import download_assets
 from . import wordpress as wp
@@ -75,53 +74,48 @@ def topo_order(graph: dict[str, list[str]] | None = None) -> list[str]:
     return out
 
 
+def _log_rows(module: str, rows: int) -> None:
+    get_logger().info("exported module %s", module, extra={"metrics": {"rows": rows}})
+
+
+def _export_entries(
+    module: str, df: DataFrame, data_dir: str, partial: bool, locale: str
+) -> DataFrame:
+    """Entries and master mapping of one content module from ONE collect of
+    ``df``'s (key, entry) rows. Full runs rewrite both documents; ids-subset
+    runs merge into them (the reference read-modify-writes every page —
+    clobbering on a resume/DLQ re-drive would destroy all other entries)."""
+    # keep only the keys: the parsed entries are freed before the master write
+    keys = list(_write_entries(
+        df, F.col("key"), F.col("entry"),
+        f"{data_dir}/entries/{module}/{locale}.json", merge=partial,
+    ))
+    write_master_mapping(
+        keys, path=f"{data_dir}/master/entries/{module}.json", locale=locale, merge=partial
+    )
+    _log_rows(module, len(keys))
+    return df
+
+
 def export_posts(
     cat: Catalog, data_dir: str, ids: DataFrame | None = None, *, locale: str = "en-us"
 ) -> DataFrame:
-    site = wp.read_site_options(cat)
-    df = wp.build_posts(cat, site, ids)
-    partial = ids is not None
-    _write_entries(
-        df, F.col("key"), F.col("entry"),
-        f"{data_dir}/entries/posts/{locale}.json", partial=partial,
-    )
-    write_master_mapping(
-        df, F.col("key"), f"{data_dir}/master/entries/posts.json",
-        locale=locale, merge=partial,
-    )
-    return df
+    df = wp.build_posts(cat, wp.read_site_options(cat), ids)
+    return _export_entries("posts", df, data_dir, ids is not None, locale)
 
 
 def export_authors(
     cat: Catalog, data_dir: str, ids: DataFrame | None = None, *, locale: str = "en-us"
 ) -> DataFrame:
-    df = wp.build_authors(cat, ids)
-    partial = ids is not None
-    _write_entries(
-        df, F.col("key"), F.col("entry"),
-        f"{data_dir}/entries/authors/{locale}.json", partial=partial,
-    )
-    write_master_mapping(
-        df, F.col("key"), f"{data_dir}/master/entries/authors.json",
-        locale=locale, merge=partial,
-    )
-    return df
+    return _export_entries("authors", wp.build_authors(cat, ids), data_dir, ids is not None, locale)
 
 
 def export_categories(
     cat: Catalog, data_dir: str, ids: DataFrame | None = None, *, locale: str = "en-us"
 ) -> DataFrame:
-    df = wp.build_categories(cat, ids)
-    partial = ids is not None
-    _write_entries(
-        df, F.col("key"), F.col("entry"),
-        f"{data_dir}/entries/categories/{locale}.json", partial=partial,
+    return _export_entries(
+        "categories", wp.build_categories(cat, ids), data_dir, ids is not None, locale
     )
-    write_master_mapping(
-        df, F.col("key"), f"{data_dir}/master/entries/categories.json",
-        locale=locale, merge=partial,
-    )
-    return df
 
 
 def export_assets(
@@ -150,26 +144,32 @@ def export_assets(
     ).localCheckpoint(eager=True)
 
     partial = ids is not None
-    ok = results.filter(F.col("status") != "failed")
     entry = F.struct(
         F.col("id").alias("uid"),
         F.col("filename"),
         F.col("url"),
         F.lit(True).alias("status"),
     )
-    _write_entries(ok, F.col("id"), entry, f"{data_dir}/assets/wp_assets.json", partial=partial)
-    write_master_mapping(
-        ok, F.col("id"), f"{data_dir}/master/wp_assets.json", locale=None, merge=partial
+    # one collect of the successes feeds the entries, both mappings and the
+    # DLQ clearing; the failures are the only other collect
+    entries = _write_entries(
+        results.filter(F.col("status") != "failed"), F.col("id"), entry,
+        f"{data_dir}/assets/wp_assets.json", merge=partial,
     )
     write_master_mapping(
-        ok, F.col("url"), f"{data_dir}/master/wp_urls.json", locale=None, merge=partial
+        entries, path=f"{data_dir}/master/wp_assets.json", locale=None, merge=partial
     )
-    failures = results.filter(F.col("status") == "failed")
+    write_master_mapping(
+        (e["url"] for e in entries.values()),
+        path=f"{data_dir}/master/wp_urls.json", locale=None, merge=partial,
+    )
     # DLQ always merges (reference preloads wp_failed.json): successes
     # clear their entries, untouched prior failures survive
-    write_dlq(failures, f"{data_dir}/master/wp_failed.json", succeeded=ok)
-
-    os.makedirs(f"{data_dir}/assets", exist_ok=True)
+    failed = write_dlq(
+        results.filter(F.col("status") == "failed"),
+        f"{data_dir}/master/wp_failed.json", succeeded=entries,
+    )
+    _log_rows("assets", len(entries) + len(failed))
     return results
 
 

@@ -12,42 +12,33 @@ turning run N's failures into run N+1's ID input.
 from __future__ import annotations
 
 import json
-import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .keyed_json import read_json_doc, write_json_doc
 
-def write_dlq(
-    failures: DataFrame,
-    path: str,
-    *,
-    id_col: str = "id",
-    error_col: str = "error",
-    succeeded: DataFrame | None = None,
-) -> None:
-    """Merge this run's failures into the DLQ file, mirroring the
-    reference's behavior exactly (assets.js:24,133-137): existing entries
-    are PRELOADED and kept, an id that succeeded this run is cleared, a
-    failure (re)writes its entry. Untouched failures from prior runs
-    survive — overwriting would silently orphan them."""
-    doc: dict = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            content = f.read().strip()
-            if content:
-                doc = json.loads(content)
-    if succeeded is not None:
-        for r in succeeded.select(F.col(id_col).cast("string").alias("k")).collect():
-            doc.pop(r["k"], None)
-    rows = failures.select(
-        F.col(id_col).cast("string").alias("k"), F.col(error_col).cast("string").alias("v")
-    ).collect()
-    for r in rows:
-        doc[r["k"]] = r["v"]
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        f.write(json.dumps(dict(sorted(doc.items())), indent=4))
+
+def write_dlq(failures: DataFrame, path: str, *, succeeded: Iterable[str] = ()) -> dict:
+    """Merge this run's ``(id, error)`` failures into the DLQ file, mirroring
+    the reference's behavior exactly (assets.js:24,133-137): existing
+    entries are PRELOADED and kept, an id in ``succeeded`` (the keys this
+    run already wrote) is cleared, a failure (re)writes its entry. Untouched
+    failures from prior runs survive — overwriting would silently orphan
+    them. One ``collect``; returns this run's failures ``{id: error}``."""
+    doc = read_json_doc(path)
+    for k in succeeded:
+        doc.pop(k, None)
+    failed = {
+        r["k"]: r["v"]
+        for r in failures.select(
+            F.col("id").cast("string").alias("k"), F.col("error").cast("string").alias("v")
+        ).collect()
+    }
+    doc.update(failed)
+    write_json_doc(path, dict(sorted(doc.items())))
+    return failed
 
 
 def read_dlq_ids(spark: SparkSession, path: str, *, col_name: str = "id") -> DataFrame:

@@ -5,182 +5,92 @@ module keyed by entry uid — ``{"16": {...}, "18": {...}}`` (posts.js:150-162)
 — plus master/locale mapping files ``{"en-us": {"16": ""}}`` (posts.js:159)
 and flat mapping files ``{uid: ""}`` / ``{url: ""}`` (assets.js:133-134).
 
-Distributed-write note (SURVEY.md §7 risk register): a single JSON
-*document* is inherently one file, so the DEFAULT assembly
-(``mode="document"``) is a driver-side write of an aggregated single
-row. Everything upstream (the entries themselves) is computed
-distributed; the aggregation ships one ``to_json``-rendered struct per
-entry, not raw tables. These files are human-scale (content entries,
-not fact data).
+A keyed document is one JSON object, so it is assembled on the driver from
+ONE ``collect`` of ``(key, to_json(value))``: the entries are computed and
+rendered on executors, the driver only parses and re-keys them. The writer
+returns the entries it wrote, so the module's master mapping, DLQ and row
+count come from that same materialization — no second Spark action, and no
+way for entries and master to disagree. These files are human-scale
+(content entries, not fact data); fact-scale output is line-oriented
+``df.write.json``, which never passes through the driver.
 
-For fact-scale output ``mode="sharded"`` (VERDICT r4 ask #8) removes
-the driver ``collect()`` entirely: entries are rendered and
-range-sorted on executors, written as ordered text shards, then
-PACKAGED into the same keyed document by streaming the shard files in
-filename order — O(1) driver memory, bounded by disk bandwidth, never
-by entry count. (For line-oriented output ``df.write.json`` remains the
-plain-writer alternative; sharded mode exists when the keyed-document
-FORMAT itself is the contract.)
+Every document is replaced atomically (``write_json_doc``): the new text is
+rendered, written to a sibling temp file and moved over the old one with
+``os.replace``, so a failed render or write leaves the prior document
+intact — the prior entries a merge exists to protect.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import shutil
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def keyed_json_string(df: DataFrame, key: Column, value: Column, *, sort_keys: bool = True) -> str:
-    """Aggregate (key, value-struct) rows into one JSON object string.
+def read_json_doc(path: str) -> dict:
+    """The JSON object at ``path``; ``{}`` if the file is missing or blank."""
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        content = f.read().strip()
+    return json.loads(content) if content else {}
 
-    Rows are rendered to JSON per-entry on executors (``to_json``); the
-    driver only assembles the final object. Keys sorted for determinism
-    (the reference's key order is page-arrival order — nondeterministic
-    under parallelism, so we pin it).
-    """
-    rendered = df.select(
-        key.cast("string").alias("__k"), F.to_json(value).alias("__v")
-    )
-    pairs = rendered.collect()
-    items = [(r["__k"], json.loads(r["__v"])) for r in pairs]
-    if sort_keys:
-        items.sort(key=lambda kv: kv[0])
-    return json.dumps(dict(items), indent=4)
+
+def write_json_doc(path: str, doc: dict) -> None:
+    """Replace ``path`` with ``doc`` rendered at ``indent=4``. The old file
+    stays untouched until the new one is complete (temp file + rename)."""
+    text = json.dumps(doc, indent=4)
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def write_keyed_json(
-    df: DataFrame,
-    key: Column,
-    value: Column,
-    path: str,
-    *,
-    sort_keys: bool = True,
-    mode: str = "document",
-) -> None:
-    """Write the keyed-JSON entries file (e.g. ``entries/posts/en-us.json``),
-    replacing any existing document. For partial (ids-subset) runs use
-    ``merge_keyed_json`` — overwrite would destroy prior entries.
+    df: DataFrame, key: Column, value: Column, path: str, *, merge: bool = False
+) -> dict:
+    """Write the keyed-JSON entries file (e.g. ``entries/posts/en-us.json``)
+    from one ``collect`` and return this run's entries ``{key: entry}``.
 
-    ``mode="document"`` (default): driver-side assembly via one
-    ``collect()`` of pre-rendered entries — right for human-scale
-    documents. ``mode="sharded"``: no driver collect; see
-    ``_write_keyed_json_sharded``. Both modes produce the same parsed
-    content (pinned by tests); keys are unique by contract (entry uids) —
-    under duplicate keys, document mode last-wins while sharded mode
-    would emit both, so dedup upstream."""
-    if mode not in ("document", "sharded"):
-        raise ValueError(f"unknown mode {mode!r} (document|sharded)")
-    if mode == "sharded":
-        _write_keyed_json_sharded(df, key, value, path)
-        return
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        f.write(keyed_json_string(df, key, value, sort_keys=sort_keys))
-
-
-def _write_keyed_json_sharded(df: DataFrame, key: Column, value: Column, path: str) -> None:
-    """Fact-scale keyed-JSON assembly with NO driver collect.
-
-    Plan: each entry renders to a single-pair JSON fragment on the
-    executors (``to_json`` of a one-entry map — to_json handles the
-    key's JSON escaping), range-repartitioned + sorted by key so the
-    numbered shard files come out in global key order (range partition i
-    holds keys entirely below partition i+1's). The packaging step then
-    streams the shards in filename order into the final ``{...}``
-    document — the driver never holds more than one line in memory, so
-    the ceiling is disk bandwidth, not heap. Output parses identically
-    to ``mode="document"`` (entry order sorted by key)."""
-    shard_dir = path + ".shards"
-    fragment = F.to_json(
-        F.map_from_arrays(F.array(key.cast("string")), F.array(value))
-    )
-    (
-        df.select(key.cast("string").alias("__k"), fragment.alias("__frag"))
-        .repartitionByRange("__k")
-        .sortWithinPartitions("__k")
-        .select("__frag")
-        .write.mode("overwrite")
-        .text(shard_dir)
-    )
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    try:
-        with open(path, "w") as out:
-            out.write("{")
-            first = True
-            for part in sorted(glob.glob(os.path.join(shard_dir, "part-*"))):
-                with open(part) as f:
-                    for line in f:
-                        line = line.strip()
-                        if not line:
-                            continue
-                        out.write("," if not first else "")
-                        out.write("\n    ")
-                        # strip the one-entry map's outer braces -> `"k": {...}`
-                        out.write(line[1:-1])
-                        first = False
-            out.write("\n}" if not first else "}")
-    finally:
-        shutil.rmtree(shard_dir, ignore_errors=True)
-
-
-def merge_keyed_json(
-    df: DataFrame, key: Column, value: Column, path: str
-) -> None:
-    """Read-modify-write merge into an existing keyed-JSON file — the
-    reference's page-merge semantics (helper.js:15-28, posts.js:145-163):
-    existing entries are kept, incoming keys overwrite. This is the
-    incremental-export sink: each micro-batch merges its entries instead
-    of rewriting the document from scratch."""
-    existing: dict = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            content = f.read().strip()
-            if content:
-                existing = json.loads(content)
-    rendered = df.select(
-        key.cast("string").alias("__k"), F.to_json(value).alias("__v")
-    ).collect()
-    for r in rendered:
-        existing[r["__k"]] = json.loads(r["__v"])
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        f.write(json.dumps(dict(sorted(existing.items())), indent=4))
+    ``merge=True`` is the reference's read-modify-write (helper.js:15-28,
+    posts.js:145-163): existing entries are kept, incoming keys overwrite —
+    required for ids-subset runs, where overwriting would destroy all other
+    entries. Keys are sorted for determinism (the reference's order is
+    page arrival, nondeterministic under parallelism); under duplicate keys
+    the last collected row wins."""
+    rows = df.select(key.cast("string").alias("k"), F.to_json(value).alias("v")).collect()
+    written = {r["k"]: json.loads(r["v"]) for r in rows}
+    del rows
+    doc = read_json_doc(path) if merge else {}
+    doc.update(written)
+    write_json_doc(path, dict(sorted(doc.items())))
+    return written
 
 
 def write_master_mapping(
-    df: DataFrame,
-    key: Column,
+    keys: Iterable[str],
     path: str,
     *,
     locale: str | None = "en-us",
     merge: bool = False,
 ) -> None:
-    """Write a master/mapping file: ``{locale: {uid: ""}}`` (posts.js:159)
-    or, with ``locale=None``, the flat ``{uid: ""}`` shape (assets.js:133).
+    """Write a master/mapping file for the given (already written) keys:
+    ``{locale: {uid: ""}}`` (posts.js:159) or, with ``locale=None``, the
+    flat ``{uid: ""}`` shape (assets.js:133). Runs no Spark job.
     ``merge=True`` keeps existing keys (the reference read-modify-writes
     its master files) — required for ids-subset runs. A locale-shaped
-    merge preserves OTHER locales' mappings in the document: with the
-    locale now configurable, a resume under locale B must not clobber
-    locale A's section (the clobber-on-resume data loss this merge path
-    exists to prevent)."""
-    keys = sorted(r["__k"] for r in df.select(key.cast("string").alias("__k")).collect())
-    existing: dict = {}
-    if merge and os.path.exists(path):
-        with open(path) as f:
-            content = f.read().strip()
-            if content:
-                existing = json.loads(content)
+    merge preserves OTHER locales' mappings in the document: a resume
+    under locale B must not clobber locale A's section."""
+    existing = read_json_doc(path) if merge else {}
     mapping = existing.get(locale, {}) if locale is not None else existing
-    mapping.update({k: "" for k in keys})
+    mapping.update(dict.fromkeys(keys, ""))
     mapping = dict(sorted(mapping.items()))
-    if locale is not None:
-        doc = {**existing, locale: mapping}
-    else:
-        doc = mapping
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        f.write(json.dumps(doc, indent=4))
+    write_json_doc(path, {**existing, locale: mapping} if locale is not None else mapping)
