@@ -155,15 +155,12 @@ def dedup_tier(spark, sf_dir: str, base_docs: int, variants: int) -> dict:
         out[f"{key}_runs"] = walls
         out[f"{key}_action"] = sorted(walls_action)[1]
 
-    # same shapes as the SCALE.md probe (16 hashes / 2 bands; hamming<=3
-    # at a 20-bit block)
+    # same shapes as the SCALE.md probe (16 hashes / 2 bands; hamming<=3)
     timed("exact_dedup", lambda: dd.exact_dedup(corpus))
     timed("minhash_neardup", lambda: dd.minhash_lsh_candidates(corpus, num_hashes=16, bands=2))
-    # round 12: unified on the exact combination blocking (k=3 -> 5
-    # blocks, 10 pair-of-block tables, ~25-bit keys) — same operator the
-    # registry headline ships; the rotation sweep stays available but is
-    # no longer the benched path (VERDICT r11 #3 A/B in SCALE.md)
-    timed("simhash_neardup", lambda: dd.simhash_neardups_blocked(corpus, max_hamming=3, combo_r=2, max_block_size=1000))
+    # exact combination blocking (k=3 -> 5 blocks, 10 pair-of-block
+    # tables, ~25-bit keys) — same operator the registry headline ships
+    timed("simhash_neardup", lambda: dd.simhash_neardups(corpus, max_hamming=3, combo_r=2, max_block_size=1000))
     timed("paragraph_dedup", lambda: dd.paragraph_dedup(corpus))
     # round-5 doc-corpus additions: exact-recall set-similarity join
     # (the variant corpus is its worst case — every variant family
@@ -192,12 +189,6 @@ def dedup_tier(spark, sf_dir: str, base_docs: int, variants: int) -> dict:
     out.update(
         dd.minhash_bucket_stats(corpus, num_hashes=16, bands=2, max_bucket_size=1000)
     )
-    # SimHash block-skew telemetry (symmetric with the LSH bucket stats:
-    # correlated signatures pile non-near-dups into shared prefix blocks).
-    sim_stats = dd.simhash_block_stats(
-        dd.simhash_df(corpus), prefix_bits=20, max_block_size=1000
-    )
-    out.update({f"sim_{k}": v for k, v in sim_stats.items()})
     return out
 
 

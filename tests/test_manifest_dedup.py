@@ -25,7 +25,7 @@ def test_first_run_bootstraps_from_missing_path(spark, tmp_path):
     # within-batch dedup keeps min-id for the duplicated content
     assert rows == {1, 2}
     # the manifest now holds exactly the survivors' hashes
-    m = mf.read_manifest(spark, path)
+    m = mf._read_pinned(spark, path, mf.MANIFEST_SCHEMA)
     assert m.count() == 2
     assert {r["first_seen_run"] for r in m.collect()} == {"r1"}
 
@@ -37,7 +37,7 @@ def test_replayed_batch_appends_nothing(spark, tmp_path):
     assert first.count() == 2
     replay = mf.incremental_dedup_run(spark, docs, path, run_id="r2")
     assert replay.count() == 0
-    assert mf.read_manifest(spark, path).count() == 2  # no r2 rows
+    assert mf._read_pinned(spark, path, mf.MANIFEST_SCHEMA).count() == 2  # no r2 rows
 
 
 def test_cross_run_accumulation_and_new_content(spark, tmp_path):
@@ -50,7 +50,7 @@ def test_cross_run_accumulation_and_new_content(spark, tmp_path):
         spark, _docs(spark, [(10, "alpha"), (11, "gamma")]), path, run_id="r2"
     )
     assert {r["doc_id"] for r in out.collect()} == {11}
-    m = mf.read_manifest(spark, path)
+    m = mf._read_pinned(spark, path, mf.MANIFEST_SCHEMA)
     assert m.count() == 3
     runs = {r["first_seen_run"] for r in m.collect()}
     assert runs == {"r1", "r2"}
@@ -133,7 +133,7 @@ def test_build_manifest_default_run_id_is_writable(spark, tmp_path):
     m = mf.build_manifest(_docs(spark, [(1, "alpha")]))
     assert dict(m.dtypes)["first_seen_run"] == "string"
     m.write.parquet(path)  # must not raise
-    assert mf.read_manifest(spark, path).count() == 1
+    assert mf._read_pinned(spark, path, mf.MANIFEST_SCHEMA).count() == 1
 
 
 def test_read_manifest_raises_on_corrupt_data(spark, tmp_path):
@@ -144,7 +144,7 @@ def test_read_manifest_raises_on_corrupt_data(spark, tmp_path):
     bad = tmp_path / "corrupt"
     bad.mkdir()
     (bad / "part-00000.parquet").write_bytes(b"this is not parquet")
-    df = mf.read_manifest(spark, str(bad))
+    df = mf._read_pinned(spark, str(bad), mf.MANIFEST_SCHEMA)
     with _pytest.raises(Exception):
         df.count()
 
@@ -320,7 +320,7 @@ def test_incremental_neardup_run_lifecycle(spark, tmp_path):
         spark, day3, path, min_est_jaccard=0.6, run_id="d3"
     )
     assert out3.count() == 0
-    m = mf.read_neardup_manifest(spark, path)
+    m = mf._read_pinned(spark, path, mf.neardup_manifest_schema())
     assert {r["first_seen_run"] for r in m.collect()} == {"d1", "d2"}
 
 
@@ -364,7 +364,7 @@ def test_incremental_neardup_portable_lifecycle(spark, tmp_path):
     ).collect()}
     assert not out3[20]["is_survivor"]
 
-    m = mf.read_neardup_manifest_portable(spark, path)
+    m = mf._read_pinned(spark, path, mf.neardup_manifest_portable_schema())
     mrows = m.collect()
     # only signable SURVIVORS persisted: doc 1 (d1) + doc 11 (d2), 4 band
     # rows each; the dropped near-dups and the unsignable doc never land
@@ -532,7 +532,7 @@ class TestSemdedupManifest:
         assert 10 not in kept2 and 11 not in kept2  # cross-run dups die
         assert len(set(kept2) & {12, 13}) == 1      # within-batch resolved
         # manifest accumulated: 2 (day1) + 1 (day2)
-        m = mf.read_semdedup_manifest(spark, path).collect()
+        m = mf._read_pinned(spark, path, mf.SEMDEDUP_MANIFEST_SCHEMA).collect()
         assert len(m) == 3
         assert {r["first_seen_run"] for r in m} == {"d1", "d2"}
 
@@ -552,7 +552,7 @@ class TestSemdedupManifest:
             spark, batch, path, centers=c, run_id="b"
         ).count()
         assert first == 2 and replay == 0
-        assert mf.read_semdedup_manifest(spark, path).count() == 2
+        assert mf._read_pinned(spark, path, mf.SEMDEDUP_MANIFEST_SCHEMA).count() == 2
 
     def test_zero_vector_never_drops_or_is_dropped(self, spark, tmp_path):
         from wordpress_sql_to_contentstack_exporter_spark.operators import manifest as mf
@@ -619,9 +619,9 @@ def test_manifest_diff_append_only_run_yields_no_removed(spark, tmp_path):
     # recomputed from the path AFTER run r2 appends to it, collapsing
     # the diff to {'retained'} (review r15) — the checkpoint severs
     # lineage so the pre-append snapshot is immutable
-    snap1 = mf.read_manifest(spark, path).select("content_hash").localCheckpoint()
+    snap1 = mf._read_pinned(spark, path, mf.MANIFEST_SCHEMA).select("content_hash").localCheckpoint()
     mf.incremental_dedup_run(spark, docs2, path, run_id="r2")
-    snap2 = mf.read_manifest(spark, path).select("content_hash")
+    snap2 = mf._read_pinned(spark, path, mf.MANIFEST_SCHEMA).select("content_hash")
     statuses = {r["status"] for r in mf.manifest_diff(snap1, snap2).collect()}
     assert "removed" not in statuses
     assert statuses == {"retained", "added"}

@@ -47,26 +47,6 @@ def exact_dedup(
     )
 
 
-
-
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """Distinct k-char shingles of normalized text (shorter texts yield the
-    whole text as a single shingle). The normalized string is let-bound
-    (``_let``) so the per-index lambda references a bound value instead
-    of re-running the normalization regex per character."""
-    return _let(
-        normalize_text(text),
-        lambda norm: F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1))
-                ),
-                lambda i: norm.substr(i, F.lit(k)),
-            )
-        ),
-    )
-
-
 def word_shingles(text: Column, k: int = 3) -> Column:
     """Distinct k-word shingles (n-grams) of normalized text.
 
@@ -155,7 +135,6 @@ def minhash_signatures_df(
     *,
     num_hashes: int = 16,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
 ) -> DataFrame:
     """MinHash signatures via explode + hash-aggregate — the scale path.
 
@@ -166,13 +145,12 @@ def minhash_signatures_df(
     all-in-one-expression form is ~50x slower: interpreted HOF lambdas,
     shingling re-evaluated per seed). Output: (id, h0..h{n-1}).
 
-    ``shingle_mode='word'`` (default) never materializes shingle strings:
+    Shingles are k-word n-grams that never materialize as strings:
     tokens are hashed once and k-gram hashes derived arithmetically
     (``word_shingle_hashes`` — ~7x faster at 200k docs, measured). The
     per-seed family is then ``xxhash64(shingle_hash, seed)`` — two-long
     input, fixed width, instead of re-hashing a variable-length string
-    per seed. ``shingle_mode='char'`` keeps string shingles (substrings
-    can't be derived from token hashes).
+    per seed.
     """
     # Input spread: this operator's per-row map work is heavy enough
     # that parallelizing it beats the one-time text shuffle on an
@@ -183,16 +161,10 @@ def minhash_signatures_df(
     # shuffle cost, so they deliberately do NOT spread. No-op on any
     # multi-partition input — see sources/catalog.spread_small_scan.
     df = spread_small_scan(df)
-    if shingle_mode == "word":
-        exploded = df.select(
-            F.col(id_col).alias("id"),
-            F.explode(word_shingle_hashes(F.col(text_col), shingle_k)).alias("sh"),
-        )
-    else:
-        exploded = df.select(
-            F.col(id_col).alias("id"),
-            F.explode(char_shingles(F.col(text_col), shingle_k)).alias("sh"),
-        )
+    exploded = df.select(
+        F.col(id_col).alias("id"),
+        F.explode(word_shingle_hashes(F.col(text_col), shingle_k)).alias("sh"),
+    )
     return exploded.groupBy("id").agg(
         *[F.min(F.xxhash64("sh", F.lit(s))).alias(f"h{s}") for s in range(num_hashes)]
     )
@@ -206,7 +178,6 @@ def minhash_banded(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
 ) -> DataFrame:
     """(id, h0..h{n-1}, band, bucket) — the banded MinHash bucket
     assignment shared by ``minhash_lsh_candidates`` (candidate self-join)
@@ -232,7 +203,6 @@ def minhash_banded(
         id_col,
         num_hashes=num_hashes,
         shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
     )
     rows_per_band = num_hashes // bands
     h_cols = [f"h{i}" for i in range(num_hashes)]
@@ -261,7 +231,6 @@ def minhash_bucket_stats(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     max_bucket_size: int = 1000,
 ) -> dict:
     """Skew telemetry for the LSH bucket distribution (VERDICT r2 ask #8).
@@ -283,7 +252,6 @@ def minhash_bucket_stats(
             num_hashes=num_hashes,
             bands=bands,
             shingle_k=shingle_k,
-            shingle_mode=shingle_mode,
         )
         .groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -308,7 +276,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     min_est_jaccard: float = 0.5,
     max_bucket_size: int | None = None,
     materialize: bool = True,
@@ -329,10 +296,6 @@ def minhash_lsh_candidates(
     blow-up at web scale. Capped-away *identical* documents are still
     collapsed by the (linear) ``exact_dedup`` pass, which is why dropping
     giant buckets is safe in the standard exact-then-near dedup pipeline.
-    ``shingle_mode='word'``
-    (default) is far more selective than char shingles on
-    small-vocabulary corpora — fewer bucket collisions, smaller
-    candidate sets.
     """
     banded = minhash_banded(
         df,
@@ -341,7 +304,6 @@ def minhash_lsh_candidates(
         num_hashes=num_hashes,
         bands=bands,
         shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
     )
     if max_bucket_size is not None:
         # Aggregate + semi-join, NOT a window over (band, bucket): a window
@@ -414,11 +376,6 @@ def minhash_lsh_candidates(
 #: near-dup power.
 SIMHASH_BITS = 63
 
-#: Rotation stride for the permuted-table blocking sweep. Coprime to 63,
-#: so 63 distinct offsets before repeating; fixed (independent of
-#: n_rotations) so recall is structurally monotone in n_rotations.
-_ROT_STRIDE = 29
-
 
 def simhash_df(
     df: DataFrame,
@@ -473,186 +430,6 @@ def simhash_df(
     return bit_sums.select("id", value.alias(out_col))
 
 
-def _rotl63(v: Column, s: int) -> Column:
-    """Rotate a 63-bit value left by ``s`` bits (bit 63 stays clear, so
-    the result remains a non-negative long — ANSI-safe)."""
-    if s == 0:
-        return v
-    mask = F.lit((1 << SIMHASH_BITS) - 1)
-    return F.shiftleft(v, s).bitwiseAND(mask).bitwiseOR(
-        F.shiftrightunsigned(v, SIMHASH_BITS - s)
-    )
-
-
-def simhash_rotated_blocks(
-    sigs: DataFrame,
-    *,
-    prefix_bits: int = 16,
-    n_rotations: int = 1,
-) -> DataFrame:
-    """(id, sh, rot, block) — the rotated prefix-block assignment shared
-    by ``simhash_pairs_from_sigs`` (candidate self-join) and
-    ``simhash_block_stats`` (skew telemetry)."""
-    if not 1 <= n_rotations <= SIMHASH_BITS:
-        raise ValueError(
-            f"n_rotations must be in [1, {SIMHASH_BITS}], got {n_rotations} "
-            "(offsets repeat beyond the signature width)"
-        )
-    rot_blocks = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("rot"),
-                F.shiftrightunsigned(
-                    _rotl63(F.col("sh"), (r * _ROT_STRIDE) % SIMHASH_BITS),
-                    SIMHASH_BITS - prefix_bits,
-                ).alias("block"),
-            )
-            for r in range(n_rotations)
-        ]
-    )
-    return sigs.select("id", "sh", F.explode(rot_blocks).alias("rb")).select(
-        "id", "sh", F.col("rb.rot").alias("rot"), F.col("rb.block").alias("block")
-    )
-
-
-def simhash_block_stats(
-    sigs: DataFrame,
-    *,
-    prefix_bits: int = 16,
-    n_rotations: int = 1,
-    max_block_size: int = 1000,
-) -> dict:
-    """Skew telemetry for the SimHash prefix-block distribution —
-    symmetric with ``minhash_bucket_stats``. SimHash signatures of a
-    small-vocabulary / boilerplate-heavy corpus are highly CORRELATED
-    (the per-bit majority votes agree), so many documents share a
-    prefix block even when they are not near-dups — blocks, like LSH
-    buckets, can go quadratic. Returns ``{"blocks", "max_block",
-    "capped_blocks"}`` from one aggregation; never materializes pairs.
-    """
-    counts = (
-        simhash_rotated_blocks(
-            sigs, prefix_bits=prefix_bits, n_rotations=n_rotations
-        )
-        .groupBy("rot", "block")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    row = counts.agg(
-        F.count(F.lit(1)).alias("blocks"),
-        F.max("n").alias("max_block"),
-        F.sum((F.col("n") > max_block_size).cast("long")).alias("capped_blocks"),
-    ).first()
-    return {
-        "blocks": row["blocks"],
-        "max_block": row["max_block"] or 0,
-        "capped_blocks": row["capped_blocks"] or 0,
-    }
-
-
-def simhash_pairs_from_sigs(
-    sigs: DataFrame,
-    *,
-    max_hamming: int = 8,
-    prefix_bits: int = 16,
-    n_rotations: int = 1,
-    max_block_size: int | None = None,
-    materialize: bool = True,
-) -> DataFrame:
-    """Near-dup pairs from precomputed (id, sh) SimHash rows: block on the
-    top ``prefix_bits`` bits, exact Hamming filter within blocks.
-
-    A single fixed prefix is blind to near-dups whose few differing bits
-    happen to fall inside it. ``n_rotations > 1`` runs the blocking over
-    additional bit rotations of the signature and unions the results: a
-    pair with ``d`` differing bits survives whenever SOME rotation moves
-    all ``d`` bits outside the prefix window, which for small ``d`` is
-    almost always (the standard Manku et al. permuted-table trick, done
-    here as one exploded join instead of N sequential jobs). Rotation
-    offsets come from a FIXED stride sequence (r * 29 mod 63, 29 coprime
-    to 63 so offsets never repeat), independent of ``n_rotations`` — so
-    the blockings used at n rotations are a strict prefix of those at
-    n+1, making recall structurally monotone in ``n_rotations`` (more
-    rotations can only add pairs). Cost grows linearly with
-    ``n_rotations`` (more exploded rows), never quadratically PER PAIR —
-    but block sizes themselves are data-dependent: correlated signatures
-    (small-vocabulary or boilerplate-heavy corpora, where per-bit
-    majorities agree across documents) can pile thousands of non-near-dup
-    docs into one prefix block, and a block of n rows contributes C(n,2)
-    join outputs. ``max_block_size`` drops whole (rot, block) groups over
-    the cap before the self-join — the same aggregate+semi-join guard as
-    ``minhash_lsh_candidates`` (and NOT a window, for the same skew
-    reason). Recall note: a capped block never yields pairs in THAT
-    rotation, but other rotations re-block the same docs differently, so
-    genuine near-dups usually survive capping; identical docs are the
-    degenerate case and belong to (linear) exact dedup anyway.
-    """
-    sh = simhash_rotated_blocks(
-        sigs, prefix_bits=prefix_bits, n_rotations=n_rotations
-    )
-    if max_block_size is not None:
-        small_blocks = (
-            sh.groupBy("rot", "block")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= max_block_size)
-            .select("rot", "block")
-        )
-        sh = sh.join(small_blocks, ["rot", "block"], "left_semi")
-    # Reused on both sides of the self-join below; lazy localCheckpoint
-    # (vs persist) so storage is auto-released after consumption and no
-    # job runs at build time. Lineage-truncation/executor-loss tradeoff
-    # documented at minhash_lsh_candidates (same reasoning);
-    # materialize=False exposes full lineage to explain tooling.
-    if materialize:
-        sh = sh.localCheckpoint(eager=False)
-    a, b = sh.alias("a"), sh.alias("b")
-    ham = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
-    return (
-        a.join(
-            b,
-            (F.col("a.rot") == F.col("b.rot"))
-            & (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def simhash_neardups(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    max_hamming: int = 8,
-    prefix_bits: int = 16,
-    n_rotations: int = 1,
-    max_block_size: int | None = None,
-    materialize: bool = True,
-) -> DataFrame:
-    """SimHash near-dup pairs: block on the top ``prefix_bits`` bits (a
-    cheap LSH — identical prefixes required), then exact Hamming filter.
-    See ``simhash_pairs_from_sigs`` for the rotation-sweep recall knob
-    and the ``max_block_size`` quadratic-blowup guard. For EXACT
-    candidate recall at the same gate, prefer
-    :func:`simhash_blocked_pairs_from_sigs` (the round-12 headline
-    path) — the sweep is kept for parity with permuted-table designs
-    and for corpora where a small rotation count is measurably cheaper.
-    """
-    return simhash_pairs_from_sigs(
-        simhash_df(df, text_col, id_col),
-        max_hamming=max_hamming,
-        prefix_bits=prefix_bits,
-        n_rotations=n_rotations,
-        max_block_size=max_block_size,
-        materialize=materialize,
-    )
-
-
 def _equal_splits(bits: int, n: int) -> list[tuple[int, int]]:
     """(offset, width) for ``n`` near-equal slices of a ``bits``-wide
     value — the shared geometry of the pigeonhole families
@@ -702,7 +479,7 @@ def simhash_combo_tables(
     return splits, subsets, first_combo
 
 
-def simhash_blocked_pairs_from_sigs(
+def simhash_pairs_from_sigs(
     sigs: DataFrame,
     *,
     bits: int = SIMHASH_BITS,
@@ -721,10 +498,7 @@ def simhash_blocked_pairs_from_sigs(
     concatenated). Pigeonhole: a pair within ``max_hamming`` differing
     bits leaves at least ``n_blocks - max_hamming`` slices untouched,
     so with ``n_blocks >= max_hamming + combo_r`` some keyed subset is
-    fully intact — candidate recall is EXACT by construction, unlike
-    the probabilistic rotation sweep (``simhash_pairs_from_sigs``,
-    measured 0.872 planted recall at the same gate where this path
-    measures the true h<=8 fraction, 0.99).
+    fully intact — candidate recall is EXACT by construction.
 
     Why combinations instead of the portable family's single-block
     keys: at ``max_hamming=8`` a single 63/9 = 7-bit slice has only 128
@@ -756,8 +530,7 @@ def simhash_blocked_pairs_from_sigs(
     via a later table) — deterministic, mirrorable semantics; the
     45-subset spread keeps genuine near-dups rare in hot buckets.
 
-    Output: (id_a, id_b, hamming), id_a < id_b — the
-    ``simhash_pairs_from_sigs`` contract, so callers can swap schemes;
+    Output: (id_a, id_b, hamming), id_a < id_b;
     ``include_signatures=True`` appends (sh_a, sh_b) for callers whose
     contract carries the signatures (the portable gate).
     """
@@ -846,7 +619,7 @@ def simhash_blocked_pairs_from_sigs(
     )
 
 
-def simhash_neardups_blocked(
+def simhash_neardups(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -857,9 +630,10 @@ def simhash_neardups_blocked(
     max_block_size: int | None = None,
     materialize: bool = True,
 ) -> DataFrame:
-    """xxhash64 SimHash near-dups via the exact combination blocking —
-    the end-to-end convenience mirroring :func:`simhash_neardups`."""
-    return simhash_blocked_pairs_from_sigs(
+    """xxhash64 SimHash near-dup pairs end to end from text:
+    :func:`simhash_df` signatures into the exact combination blocking
+    of :func:`simhash_pairs_from_sigs`."""
+    return simhash_pairs_from_sigs(
         simhash_df(df, text_col, id_col),
         max_hamming=max_hamming,
         combo_r=combo_r,
@@ -1326,9 +1100,8 @@ def banded_hamming_pairs(
     The 64-bit signature splits into ``bands`` equal blocks; two rows
     become a candidate pair iff they agree on at least one whole block
     (pigeonhole-guaranteed for Hamming distance < ``bands``; a
-    measured-recall heuristic above that, the SimHash rotation
-    trade-off). Candidates are verified exactly with
-    ``bit_count(a ^ b) <= max_hamming``.
+    measured-recall heuristic above that). Candidates are verified
+    exactly with ``bit_count(a ^ b) <= max_hamming``.
 
     Scale shape: the self-join shuffles (band_no, block) keys — a few
     bytes per row, never the underlying media — and the verify is a
@@ -1723,7 +1496,7 @@ def simhash_portable_pairs(
     md5-derived token hashes and integer bit arithmetic end-to-end, so
     the per-document simhash values, the candidate blocks, and the
     final pair set reproduce bit-for-bit in any engine. The xxhash64
-    family (:func:`simhash_neardups_blocked`) stays the throughput
+    family (:func:`simhash_neardups`) stays the throughput
     path; this one is the hash-verifiable contract a cross-engine
     manifest stores.
 
@@ -1770,7 +1543,7 @@ def simhash_portable_pairs(
     if max_block_size < 2:
         raise ValueError("max_block_size >= 2 required")
     sh = simhash_portable_signatures(df, text_col, id_col)
-    out = simhash_blocked_pairs_from_sigs(
+    out = simhash_pairs_from_sigs(
         sh,
         bits=SIMHASH_PORTABLE_BITS,
         max_hamming=max_hamming,

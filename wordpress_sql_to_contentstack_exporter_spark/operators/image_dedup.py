@@ -14,8 +14,7 @@ by the pHash family / imagehash library, banded like SimHash):
    blocks: fewer differing bits than bands (d < 4) GUARANTEES an
    untouched block by pigeonhole; for 4 <= d <= 6 a shared block holds
    unless the differing bits spread across every block — a high-recall
-   heuristic, the same trade-off as SimHash's rotation blocking,
-   measured (planted-pair recall) rather than assumed,
+   heuristic, measured (planted-pair recall) rather than assumed,
 4. verify candidates with an exact popcount (``bit_count(a ^ b)``).
 
 Scale shape: the decode is Arrow-batched ``mapInPandas`` (per-partition

@@ -144,26 +144,29 @@ def manifest_dedup(
     ).select(id_col, "content_hash")
 
 
-def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    """Load the manifest PINNED to the files present right now; a
-    missing/empty path yields an empty manifest (first run bootstraps
-    from nothing, the ``assets.js`` pattern where an absent file means
-    "download everything").
+def _read_pinned(
+    spark: SparkSession, path: str, schema: T.StructType
+) -> DataFrame:
+    """Load a parquet manifest PINNED to the files present right now; a
+    missing/empty path yields an empty manifest of ``schema`` (first
+    run bootstraps from nothing, the ``assets.js`` pattern where an
+    absent file means "download everything"). The one reader behind
+    every plain-parquet manifest: exact, near-dup, portable near-dup
+    and semantic.
 
     The pinning is load-bearing, not hygiene: the daily step reads the
     manifest, anti-joins, then APPENDS to the same path. A plain
     ``read.parquet(path)`` plan is lazy over the DIRECTORY, so any
     recompute of the survivor frame after the append (task retry,
     executor loss, a second action on the returned DataFrame) would see
-    the batch's own freshly-appended hashes and anti-join the batch
-    against itself — silently emptying the result. Enumerating the
-    files once and reading exactly that list makes every recompute see
-    the same pre-append snapshot."""
+    the batch's own freshly-appended rows and probe the batch against
+    itself — silently emptying the result. Enumerating the files once
+    and reading exactly that list makes every recompute see the same
+    pre-append snapshot."""
     from pyspark.errors import AnalysisException
 
     try:
-        snapshot = spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-        files = snapshot.inputFiles()
+        files = spark.read.schema(schema).parquet(path).inputFiles()
     except AnalysisException as e:
         # ONLY path-absent means first-run bootstrap. Anything else — a
         # transient storage error, permissions, a corrupt footer — must
@@ -172,11 +175,11 @@ def read_manifest(spark: SparkSession, path: str) -> DataFrame:
         # the run would silently re-ship and re-append everything
         # (round-8 review finding).
         if _is_path_absent(e):
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
+            return spark.createDataFrame([], schema)
         raise
     if not files:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
-    return spark.read.schema(MANIFEST_SCHEMA).parquet(*files)
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*files)
 
 
 def append_survivors(
@@ -242,9 +245,9 @@ def build_manifest_bucketed(
 def read_manifest_bucketed(spark: SparkSession, table: str) -> DataFrame:
     """Load the bucketed manifest via the catalog — the ONLY read that
     preserves the bucket spec (reading the parquet files directly, as
-    the snapshot-pinned ``read_manifest`` does, drops the bucketing
+    the snapshot-pinned ``_read_pinned`` does, drops the bucketing
     metadata and re-introduces the manifest-side Exchange). A missing
-    table bootstraps empty, same as ``read_manifest``.
+    table bootstraps empty, same as ``_read_pinned``.
 
     Snapshot pinning is therefore handled DIFFERENTLY here: a catalog
     read is lazy over the table's current file listing, so
@@ -296,7 +299,7 @@ def incremental_dedup_run_bucketed(
     intact → manifest never shuffles) → anti-join → EAGER checkpoint of
     the survivors → append into the buckets → return the survivors.
 
-    The eager checkpoint replaces ``read_manifest``'s file pinning
+    The eager checkpoint replaces ``_read_pinned``'s file pinning
     (which is unavailable here — see ``read_manifest_bucketed``): the
     survivor rows are fully materialized from the pre-append snapshot
     before the append begins, and any post-append action reads those
@@ -338,7 +341,6 @@ def build_neardup_manifest(
     num_hashes: int = 16,
     bands: int = 2,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     run_id: str | None = None,
 ) -> DataFrame:
     """The NEAR-dup analogue of ``build_manifest``: one row per
@@ -350,7 +352,7 @@ def build_neardup_manifest(
     repeats per band row; at web scale, normalize into a signature
     table + a band table if bands is large). Text is never stored.
 
-    The (num_hashes, bands, shingle_k, shingle_mode) configuration is
+    The (num_hashes, bands, shingle_k) configuration is
     BAKED INTO the stored signatures: probing with a different
     configuration silently finds nothing, so the parameters must be
     pinned for the manifest's lifetime (store them alongside the path).
@@ -364,7 +366,6 @@ def build_neardup_manifest(
         num_hashes=num_hashes,
         bands=bands,
         shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
     )
     return banded.withColumn("first_seen_run", F.lit(run_id).cast("string"))
 
@@ -378,7 +379,6 @@ def neardup_manifest_dedup(
     num_hashes: int = 16,
     bands: int = 2,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     min_est_jaccard: float = 0.9,
     max_bucket_size: int | None = 200_000,
 ) -> DataFrame:
@@ -411,7 +411,6 @@ def neardup_manifest_dedup(
         num_hashes=num_hashes,
         bands=bands,
         shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
         min_est_jaccard=min_est_jaccard,
         max_bucket_size=max_bucket_size,
     )
@@ -427,7 +426,6 @@ def _neardup_probe_and_survivors(
     num_hashes: int,
     bands: int,
     shingle_k: int,
-    shingle_mode: str,
     min_est_jaccard: float,
     max_bucket_size: int | None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -447,7 +445,6 @@ def _neardup_probe_and_survivors(
         num_hashes=num_hashes,
         bands=bands,
         shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
     ).localCheckpoint(eager=False)
 
     m = manifest
@@ -498,9 +495,9 @@ def incremental_dedup_run(
     """The whole daily step: read manifest (pinned snapshot) →
     anti-join the batch → append the survivors' hashes → return the
     survivors. The returned frame stays lazy but recomputes against the
-    PRE-append snapshot (see ``read_manifest``), so a caller action
+    PRE-append snapshot (see ``_read_pinned``), so a caller action
     after the append returns the same rows that were appended."""
-    manifest = read_manifest(spark, manifest_path)
+    manifest = _read_pinned(spark, manifest_path, MANIFEST_SCHEMA)
     survivors = manifest_dedup(
         new_docs, manifest, text_col=text_col, id_col=id_col
     ).localCheckpoint(eager=False)
@@ -530,27 +527,6 @@ def neardup_manifest_schema(num_hashes: int = 16) -> T.StructType:
     )
 
 
-def read_neardup_manifest(
-    spark: SparkSession, path: str, *, num_hashes: int = 16
-) -> DataFrame:
-    """Load the signature manifest, snapshot-pinned for the same
-    read-probe-append reason as ``read_manifest`` (a post-append
-    recompute must not probe the batch's own signatures)."""
-    from pyspark.errors import AnalysisException
-
-    schema = neardup_manifest_schema(num_hashes)
-    try:
-        snapshot = spark.read.schema(schema).parquet(path)
-        files = snapshot.inputFiles()
-    except AnalysisException as e:
-        if _is_path_absent(e):
-            return spark.createDataFrame([], schema)
-        raise
-    if not files:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*files)
-
-
 def incremental_neardup_run(
     spark: SparkSession,
     new_docs: DataFrame,
@@ -561,7 +537,6 @@ def incremental_neardup_run(
     num_hashes: int = 16,
     bands: int = 2,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     min_est_jaccard: float = 0.9,
     max_bucket_size: int | None = 200_000,
     run_id: str,
@@ -576,8 +551,8 @@ def incremental_neardup_run(
     pipeline) before downstream use — their signatures are appended
     as-is, so tomorrow's batch dedups against ALL of today's keepers.
     """
-    manifest = read_neardup_manifest(
-        spark, manifest_path, num_hashes=num_hashes
+    manifest = _read_pinned(
+        spark, manifest_path, neardup_manifest_schema(num_hashes)
     )
     probe, survivors = _neardup_probe_and_survivors(
         new_docs,
@@ -587,7 +562,6 @@ def incremental_neardup_run(
         num_hashes=num_hashes,
         bands=bands,
         shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
         min_est_jaccard=min_est_jaccard,
         max_bucket_size=max_bucket_size,
     )
@@ -625,7 +599,6 @@ def build_neardup_manifest_bucketed(
     num_hashes: int = 16,
     bands: int = 2,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     run_id: str | None = None,
 ) -> None:
     """Bootstrap the signature manifest as a saved table BUCKETED by
@@ -647,7 +620,6 @@ def build_neardup_manifest_bucketed(
         num_hashes=num_hashes,
         bands=bands,
         shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
         run_id=run_id,
     )
     (
@@ -683,7 +655,6 @@ def incremental_neardup_run_bucketed(
     num_hashes: int = 16,
     bands: int = 2,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     min_est_jaccard: float = 0.9,
     max_bucket_size: int | None = 200_000,
     run_id: str,
@@ -705,7 +676,6 @@ def incremental_neardup_run_bucketed(
             num_hashes=num_hashes,
             bands=bands,
             shingle_k=shingle_k,
-            shingle_mode=shingle_mode,
             run_id=run_id,
         )
     manifest = read_neardup_manifest_bucketed(
@@ -719,7 +689,6 @@ def incremental_neardup_run_bucketed(
         num_hashes=num_hashes,
         bands=bands,
         shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
         min_est_jaccard=min_est_jaccard,
         max_bucket_size=max_bucket_size,
     )
@@ -808,27 +777,6 @@ def build_neardup_manifest_portable(
         )
         .withColumn("first_seen_run", F.lit(run_id).cast("string"))
     )
-
-
-def read_neardup_manifest_portable(
-    spark: SparkSession, path: str, *, num_hashes: int = 16
-) -> DataFrame:
-    """Snapshot-pinned load of the portable signature manifest (same
-    read-probe-append rationale as ``read_manifest``); a missing path
-    bootstraps empty."""
-    from pyspark.errors import AnalysisException
-
-    schema = neardup_manifest_portable_schema(num_hashes)
-    try:
-        snapshot = spark.read.schema(schema).parquet(path)
-        files = snapshot.inputFiles()
-    except AnalysisException as e:
-        if _is_path_absent(e):
-            return spark.createDataFrame([], schema)
-        raise
-    if not files:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*files)
 
 
 def neardup_probe_portable(
@@ -946,8 +894,8 @@ def incremental_neardup_run_portable(
     reproduce today's keep/drop decisions bit-for-bit — the property
     the registry gate `incremental_neardup_portable` hash-verifies
     against DuckDB across the full write → read → probe round trip."""
-    manifest = read_neardup_manifest_portable(
-        spark, manifest_path, num_hashes=num_hashes
+    manifest = _read_pinned(
+        spark, manifest_path, neardup_manifest_portable_schema(num_hashes)
     )
     probe_rows, scored = neardup_probe_portable(
         new_docs,
@@ -1004,24 +952,6 @@ def _unit_vector(vec):
         ).otherwise(v)
 
     return _let(_as_double(vec), body)
-
-
-def read_semdedup_manifest(spark: SparkSession, path: str) -> DataFrame:
-    """Load the semantic manifest, snapshot-pinned for the same
-    read-probe-append reason as ``read_manifest`` (a post-append
-    recompute must not probe the batch's own survivors)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        snapshot = spark.read.schema(SEMDEDUP_MANIFEST_SCHEMA).parquet(path)
-        files = snapshot.inputFiles()
-    except AnalysisException as e:
-        if _is_path_absent(e):
-            return spark.createDataFrame([], SEMDEDUP_MANIFEST_SCHEMA)
-        raise
-    if not files:
-        return spark.createDataFrame([], SEMDEDUP_MANIFEST_SCHEMA)
-    return spark.read.schema(SEMDEDUP_MANIFEST_SCHEMA).parquet(*files)
 
 
 def semdedup_manifest_dedup(
@@ -1116,7 +1046,7 @@ def incremental_semdedup_run(
     within-batch prune -> append survivors -> return them. First run
     against an absent path bootstraps (the whole batch is the probe's
     trivial survivor set and seeds the manifest)."""
-    manifest = read_semdedup_manifest(spark, path)
+    manifest = _read_pinned(spark, path, SEMDEDUP_MANIFEST_SCHEMA)
     survivors = semdedup_manifest_dedup(
         batch,
         manifest,

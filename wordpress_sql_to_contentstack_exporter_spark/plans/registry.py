@@ -2115,7 +2115,7 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" tail")).alias("text"),
     )
     both = d.select("doc_id", "text").unionByName(perturbed)
-    return dd.simhash_neardups_blocked(
+    return dd.simhash_neardups(
         both, max_hamming=6, combo_r=2, max_block_size=1000
     )
 

@@ -16,14 +16,16 @@ way for entries and master to disagree. These files are human-scale
 
 Every document is replaced atomically (``write_json_doc``): the new text is
 rendered, written to a sibling temp file and moved over the old one with
-``os.replace``, so a failed render or write leaves the prior document
-intact — the prior entries a merge exists to protect.
+``os.replace`` (``write_atomic``, which the asset downloader shares), so a
+failed render or write leaves the prior document intact — the prior
+entries a merge exists to protect.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import uuid
 from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame
@@ -39,19 +41,27 @@ def read_json_doc(path: str) -> dict:
     return json.loads(content) if content else {}
 
 
-def write_json_doc(path: str, doc: dict) -> None:
-    """Replace ``path`` with ``doc`` rendered at ``indent=4``. The old file
-    stays untouched until the new one is complete (temp file + rename)."""
-    text = json.dumps(doc, indent=4)
+def write_atomic(path: str, data: bytes) -> None:
+    """Replace ``path`` with ``data``. The bytes go to a sibling temp file
+    and are moved into place with ``os.replace``, so ``path`` is either the
+    old file or the complete new one, never a partial write. The temp name
+    is unique per call, so concurrent task attempts writing the same path
+    cannot interleave; a failed write removes its temp file."""
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = path + ".tmp"
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
     try:
-        with open(tmp, "w") as f:
-            f.write(text)
+        with open(tmp, "wb") as f:
+            f.write(data)
         os.replace(tmp, path)
     finally:
         if os.path.exists(tmp):
             os.remove(tmp)
+
+
+def write_json_doc(path: str, doc: dict) -> None:
+    """Replace ``path`` with ``doc`` rendered at ``indent=4``. The old file
+    stays untouched until the new one is complete (``write_atomic``)."""
+    write_atomic(path, json.dumps(doc, indent=4).encode())
 
 
 def write_keyed_json(

@@ -4,7 +4,9 @@ Reproduces the reference's download semantics (assets.js:70-140):
 
 - filename = last ``/``-segment of the guid (assets.js:74-76)
 - URL percent-encoded like JS ``encodeURI`` (assets.js:77)
-- idempotent skip if ``<dest>/<ID>/<name>`` already exists (assets.js:78-80)
+- idempotent skip if ``<dest>/<ID>/<name>`` already exists (assets.js:78-80);
+  files are written to a temp name and renamed into place, so an existing
+  file is always a complete download
 - 60 s timeout (assets.js:84), retry-once then dead-letter (assets.js:88-125)
 - successful download clears any previous DLQ entry (assets.js:133-137)
 
@@ -24,7 +26,6 @@ from __future__ import annotations
 
 import os
 import urllib.parse
-import urllib.request
 from collections.abc import Callable, Iterator
 from typing import Optional
 
@@ -32,6 +33,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..sinks.keyed_json import write_atomic
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -55,14 +58,6 @@ def encode_uri(url: str) -> str:
     return urllib.parse.quote(url, safe=_ENCODE_URI_SAFE)
 
 
-def default_fetch(url: str, timeout: float) -> bytes:
-    """One-shot HTTP GET (no connection reuse); raises on non-200."""
-    with urllib.request.urlopen(url, timeout=timeout) as resp:
-        if getattr(resp, "status", 200) != 200:
-            raise RuntimeError(f"status code: {resp.status}")
-        return resp.read()
-
-
 #: Follow at most this many 3xx hops (loop guard; WP media URLs commonly
 #: 301 to https or to a CDN host).
 _MAX_REDIRECTS = 5
@@ -76,10 +71,9 @@ def pooled_fetch_factory():
     inside the downloader.
 
     3xx responses follow ``Location`` (up to ``_MAX_REDIRECTS`` hops,
-    relative or absolute) — matching ``default_fetch``'s urllib behavior,
-    which follows redirects transparently; without this, every
-    http->https upgrade or CDN move would dead-letter under the pooled
-    path only."""
+    relative or absolute) — as urllib follows redirects transparently;
+    without this, every http->https upgrade or CDN move would
+    dead-letter."""
     import http.client
 
     conns: dict = {}
@@ -132,15 +126,13 @@ def download_assets(
     assets: DataFrame,
     dest_dir: str,
     *,
-    id_col: str = "ID",
-    url_col: str = "guid",
     timeout: float = 60.0,
     retries: int = 1,
     parallelism: int = 2,
-    skip_existing: bool = True,
     fetch: Optional[Callable[[str, float], bytes]] = None,
 ) -> DataFrame:
-    """Download every asset row to ``<dest_dir>/<id>/<filename>``.
+    """Download every asset row (``ID``, ``guid``) to
+    ``<dest_dir>/<id>/<filename>``, skipping files that already exist.
 
     Returns the result DataFrame (RESULT_SCHEMA). ``fetch`` is injectable
     for tests; it must be picklable (a module-level function or closure).
@@ -150,7 +142,7 @@ def download_assets(
     """
     injected = fetch
     rows = assets.selectExpr(
-        f"cast({id_col} as long) as id", f"cast({url_col} as string) as url"
+        "cast(ID as long) as id", "cast(guid as string) as url"
     ).repartition(max(1, parallelism))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -160,20 +152,16 @@ def download_assets(
             for rid, raw_url in zip(pdf["id"], pdf["url"]):
                 name = (raw_url or "").split("/")[-1]
                 url = encode_uri(raw_url or "")
-                target_dir = os.path.join(dest_dir, str(rid))
-                target = os.path.join(target_dir, name)
+                target = os.path.join(dest_dir, str(rid), name)
                 status, error, tries = "downloaded", None, 0
-                if skip_existing and os.path.exists(target):
+                if os.path.exists(target):
                     status = "skipped"
                 else:
                     last_err = None
                     while tries <= retries:
                         tries += 1
                         try:
-                            body = fetch_fn(url, timeout)
-                            os.makedirs(target_dir, exist_ok=True)
-                            with open(target, "wb") as f:
-                                f.write(body)
+                            write_atomic(target, fetch_fn(url, timeout))
                             last_err = None
                             break
                         except Exception as e:  # noqa: BLE001 — any failure dead-letters
