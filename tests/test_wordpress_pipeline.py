@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from wordpress_sql_to_contentstack_exporter_spark.plans import pipeline as pl
@@ -176,8 +177,6 @@ def test_validation_pass(wp_catalog):
 
 
 def test_unknown_module_rejected(wp_catalog, tmp_path):
-    import pytest
-
     with pytest.raises(ValueError, match="unknown modules"):
         pl.run_export(wp_catalog, str(tmp_path), modules=["nope"])
 
@@ -214,13 +213,27 @@ def test_posts_plan_no_forced_broadcast_on_fact_sides(spark, wp_catalog):
     assert len(fact_joins) == 2, plan
 
 
-def test_full_export_via_jdbc_catalog_matches_parquet_path(spark, wp_catalog, tmp_path):
-    """End-to-end ``kind='jdbc'`` run: every WP table served by embedded
-    Derby with its own PK partition column (config.WP_PARTITION_COLUMNS),
-    full four-module export, outputs compared file-for-file against the
-    in-memory-catalog golden path. Mirrors the reference's MySQL-backed
-    run (helper.js:43-51, config/index.json:28-33) on the one JDBC engine
-    in the container."""
+def jobs_in_group(sc, group):
+    """Job ids of a job group, once the status store has seen every event."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def clear_job_group(sc):
+    for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+        sc.setLocalProperty(key, None)
+
+
+@pytest.mark.parametrize("kind", ["jdbc", "parquet"])
+def test_full_export_via_jdbc_catalog_matches_parquet_path(spark, wp_catalog, tmp_path, kind):
+    """End-to-end run from a configured source, full four-module export,
+    outputs compared file-for-file against the in-memory-catalog golden
+    path. ``kind='jdbc'``: every WP table served by embedded Derby with its
+    own PK partition column (config.WP_PARTITION_COLUMNS), mirroring the
+    reference's MySQL-backed run (helper.js:43-51, config/index.json:28-33)
+    on the one JDBC engine in the container. ``kind='parquet'``: the
+    ``wp_*.parquet`` directory the CLI reads, whose loader infers each
+    table's schema once."""
     import os
 
     from wordpress_sql_to_contentstack_exporter_spark.config import (
@@ -233,50 +246,68 @@ def test_full_export_via_jdbc_catalog_matches_parquet_path(spark, wp_catalog, tm
         ensure_derby_varchar_dialect,
     )
 
-    url = f"jdbc:derby:{tmp_path}/wpfull;create=true"
-    props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-    # StringType -> VARCHAR (Spark's stock Derby dialect would CLOB every
-    # string column: NULL-string writes die with ERROR 22005 and string
-    # predicates can't push). The engine registers this itself on the read
-    # side; the fixture WRITE below needs it too, so register up front.
-    ensure_derby_varchar_dialect(spark)
+    if kind == "jdbc":
+        url = f"jdbc:derby:{tmp_path}/wpfull;create=true"
+        props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
+        # StringType -> VARCHAR (Spark's stock Derby dialect would CLOB every
+        # string column: NULL-string writes die with ERROR 22005 and string
+        # predicates can't push). The engine registers this itself on the
+        # read side; the fixture WRITE below needs it too, so register up front.
+        ensure_derby_varchar_dialect(spark)
 
-    # The fixture frames lack the surrogate PKs real WP tables carry; add
-    # them so per-table partition columns resolve (extra cols are ignored
-    # by the modules' explicit projections).
-    extra_pk = {"usermeta": "umeta_id", "postmeta": "meta_id", "options": "option_id"}
-    for name in WP_TABLES:
-        df = wp_catalog.table(name)
-        if name in extra_pk:
-            df = df.withColumn(
-                extra_pk[name], F.monotonically_increasing_id() + F.lit(1)
+        # The fixture frames lack the surrogate PKs real WP tables carry; add
+        # them so per-table partition columns resolve (extra cols are ignored
+        # by the modules' explicit projections).
+        extra_pk = {"usermeta": "umeta_id", "postmeta": "meta_id", "options": "option_id"}
+        for name in WP_TABLES:
+            df = wp_catalog.table(name)
+            if name in extra_pk:
+                df = df.withColumn(
+                    extra_pk[name], F.monotonically_increasing_id() + F.lit(1)
+                )
+            (
+                df.write.format("jdbc")
+                .option("url", url)
+                .option("dbtable", f"wp_{name}")
+                .option("driver", props["driver"])
+                .save()
             )
-        (
-            df.write.format("jdbc")
-            .option("url", url)
-            .option("dbtable", f"wp_{name}")
-            .option("driver", props["driver"])
-            .save()
-        )
 
-    cfg = ExportConfig(
-        source=SourceConfig(
-            kind="jdbc", jdbc_url=url, jdbc_properties=props, num_partitions=2
+        cfg = ExportConfig(
+            source=SourceConfig(
+                kind="jdbc", jdbc_url=url, jdbc_properties=props, num_partitions=2
+            )
         )
-    )
-    cat = build_catalog(spark, cfg)
-    # per-PK partitioned reads actually happened
-    assert cat.table("posts").rdd.getNumPartitions() == 2
-    # postmeta's fixture has ONE row: the meta_id bounds query succeeds
-    # (wrong-PK-name would error) but MIN==MAX collapses the range to a
-    # single partition — Spark's documented JDBC partitioning behavior.
-    assert cat.table("postmeta").rdd.getNumPartitions() == 1
-    assert cat.table("term_relationships").rdd.getNumPartitions() == 1  # composite PK
+        cat = build_catalog(spark, cfg)
+        # per-PK partitioned reads actually happened
+        assert cat.table("posts").rdd.getNumPartitions() == 2
+        # postmeta's fixture has ONE row: the meta_id bounds query succeeds
+        # (wrong-PK-name would error) but MIN==MAX collapses the range to a
+        # single partition — Spark's documented JDBC partitioning behavior.
+        assert cat.table("postmeta").rdd.getNumPartitions() == 1
+        assert cat.table("term_relationships").rdd.getNumPartitions() == 1  # composite PK
+    else:
+        src = str(tmp_path / "src")
+        for name in WP_TABLES:
+            wp_catalog.table(name).write.parquet(f"{src}/wp_{name}.parquet")
+        cat = build_catalog(spark, ExportConfig(source=SourceConfig(kind="parquet", path=src)))
+        sc = spark.sparkContext
+        group = f"catalog-{tmp_path.name}"
+        sc.setJobGroup(group, "parquet schema inference")
+        try:
+            cat.table("posts")
+            first = jobs_in_group(sc, group)
+            again = cat.table("posts")
+            assert first  # the first load infers the schema with a Spark job
+            assert jobs_in_group(sc, group) == first
+        finally:
+            clear_job_group(sc)
+        assert again.schema == spark.read.parquet(f"{src}/wp_posts.parquet").schema
 
     gold_dir = str(tmp_path / "gold")
-    jdbc_dir = str(tmp_path / "jdbc")
+    out_dir = str(tmp_path / kind)
     pl.run_export(wp_catalog, gold_dir, fetch=fake_fetch)
-    pl.run_export(cat, jdbc_dir, fetch=fake_fetch)
+    pl.run_export(cat, out_dir, fetch=fake_fetch)
 
     def tree(root):
         files = {}
@@ -288,13 +319,13 @@ def test_full_export_via_jdbc_catalog_matches_parquet_path(spark, wp_catalog, tm
                     files[rel] = f.read()
         return files
 
-    gold, via_jdbc = tree(gold_dir), tree(jdbc_dir)
-    assert set(gold) == set(via_jdbc)
+    gold, via_source = tree(gold_dir), tree(out_dir)
+    assert set(gold) == set(via_source)
     for rel in gold:
         if rel.endswith(".json"):
-            assert json.loads(via_jdbc[rel]) == json.loads(gold[rel]), rel
+            assert json.loads(via_source[rel]) == json.loads(gold[rel]), rel
         else:
-            assert via_jdbc[rel] == gold[rel], rel
+            assert via_source[rel] == gold[rel], rel
 
 
 def test_one_spark_action_per_export_module(spark, wp_catalog, tmp_path, monkeypatch):
@@ -359,3 +390,119 @@ def test_one_spark_action_per_export_module(spark, wp_catalog, tmp_path, monkeyp
         "exported module categories": 3,
         "exported module assets": 2,  # one downloaded, one dead-lettered
     }
+
+
+def make_waiting_fetch(data_dir: str, deadline_s: float = 30.0):
+    """A fetch that returns only once the posts entries document exists,
+    so an asset is downloaded only if posts finish while the download is
+    still running. Nested so cloudpickle ships it by value."""
+    def waiting_fetch(url: str, timeout: float) -> bytes:
+        import os
+        import time
+
+        target = os.path.join(data_dir, "entries", "posts", "en-us.json")
+        give_up = time.monotonic() + deadline_s
+        while not os.path.exists(target):
+            if time.monotonic() > give_up:
+                raise TimeoutError(f"{target} not written within {deadline_s} s")
+            time.sleep(0.05)
+        if "fail" in url:
+            raise RuntimeError("status code: 500")
+        return b"PNGDATA:" + url.encode()
+
+    return waiting_fetch
+
+
+def test_modules_run_concurrently(wp_catalog, tmp_path):
+    """The download overlaps the content modules: its fetch waits for the
+    posts document, which a serial assets-first order writes only after
+    the download has given up and dead-lettered the asset."""
+    data = str(tmp_path / "data")
+    out = pl.run_export(
+        wp_catalog, data, fetch=make_waiting_fetch(data),
+        asset_parallelism=1, http_retries=0,
+    )
+    status = {r["id"]: r["status"] for r in out["assets"].collect()}
+    assert status == {20: "downloaded", 21: "failed"}
+    assert set(read(f"{data}/assets/wp_assets.json")) == {"20"}
+    assert set(read(f"{data}/master/wp_failed.json")) == {"21"}
+
+
+def test_failed_module_raises_after_the_others_finish(wp_catalog, tmp_path, monkeypatch):
+    """A failing module's error reaches the caller and the CLI, but only
+    once every other module has written its documents and no export
+    thread is left running."""
+    import threading
+
+    from wordpress_sql_to_contentstack_exporter_spark import config
+    from wordpress_sql_to_contentstack_exporter_spark.__main__ import main
+
+    class Boom(RuntimeError):
+        pass
+
+    def broken(*args, **kwargs):
+        raise Boom("categories failed")
+
+    monkeypatch.setattr(pl, "export_categories", broken)
+    data = str(tmp_path / "data")
+    threads = threading.active_count()
+    with pytest.raises(Boom):
+        pl.run_export(wp_catalog, data, fetch=fake_fetch)
+    assert threading.active_count() == threads
+    assert set(read(f"{data}/entries/posts/en-us.json")) == {"10", "11"}
+    assert read(f"{data}/master/entries/posts.json") == {"en-us": {"10": "", "11": ""}}
+    assert set(read(f"{data}/entries/authors/en-us.json")) == {"alice", "carol"}
+    assert set(read(f"{data}/master/entries/authors.json")["en-us"]) == {"alice", "carol"}
+    assert set(read(f"{data}/assets/wp_assets.json")) == {"20"}
+    assert set(read(f"{data}/master/wp_failed.json")) == {"21"}
+    assert not (tmp_path / "data" / "entries" / "categories").exists()
+
+    cfg_path = tmp_path / "cfg.json"
+    cfg_path.write_text(json.dumps({"data_dir": str(tmp_path / "cli")}))
+    monkeypatch.setattr(config, "build_catalog", lambda spark, cfg: wp_catalog)
+    with pytest.raises(Boom):
+        main(["export", "--config", str(cfg_path), "--module", "categories"])
+
+
+def test_parquet_loader_infers_schema_once_under_concurrent_loads(spark, tmp_path):
+    """Eight threads (more than the session's cores) make the first load of
+    one parquet table at once: exactly one schema-inference job runs, and
+    every thread still gets its own complete DataFrame."""
+    import sys
+    import threading
+
+    from wordpress_sql_to_contentstack_exporter_spark.sources.catalog import parquet_table
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(10).write.parquet(path)
+    load = parquet_table(path)
+    sc = spark.sparkContext
+    group = f"infer-{tmp_path.name}"
+    start = threading.Barrier(8)
+    frames, errors = [], []
+
+    def first_load():
+        sc.setJobGroup(group, "concurrent first loads")
+        try:
+            start.wait(timeout=30)
+            frames.append(load(spark))
+        except Exception as e:  # noqa: BLE001 — reported by the assertion below
+            errors.append(e)
+        finally:
+            clear_job_group(sc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=first_load) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(jobs_in_group(sc, group)) == 1
+    assert len({id(f) for f in frames}) == 8
+    assert all(f.count() == 10 for f in frames)

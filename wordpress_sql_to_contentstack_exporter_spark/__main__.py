@@ -5,7 +5,7 @@ SURVEY.md §2 row 43).
         [--module assets|authors|categories|posts] [--ids-file ids.txt]
 
 Module selection and the resume-by-ID file behave like the reference CLI;
-with no module, all four run in the reference's fixed order.
+with no module, all four run, concurrently (``plans.pipeline.run_export``).
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ def main(argv: list[str] | None = None) -> int:
         "--module",
         choices=["assets", "authors", "categories", "posts"],
         default=None,
-        help="run a single module (default: all, in reference order)",
+        help="run a single module (default: all four, concurrently)",
     )
     exp.add_argument("--ids-file", default=None, help="comma/newline-separated IDs to (re-)export")
     qry = sub.add_parser(

@@ -7,6 +7,15 @@ functions over a Catalog; posts consume the featured-image *DataFrame*
 directly, so single-module runs materialize their upstream dependencies on
 demand instead of trusting a previous run's files (fix of SURVEY.md §3.2).
 
+The selected modules run concurrently, one thread each, on the one
+SparkSession. That is safe because they are independent: no module reads
+another's output (posts take the featured image from ``postmeta``, not from
+the download result; ``REFERENCE_GRAPH`` has no edge into or out of
+assets), and each writes only its own documents and directories. It is
+faster because the download's tasks hold ``asset_parallelism`` slots while
+they wait on HTTP, and the content modules' driver-side planning and jobs
+use that time and the remaining slots instead of queueing behind it.
+
 Output layout mirrors config/index.json:5-27:
 
     <data>/assets/<ID>/<filename>         downloaded binaries
@@ -29,6 +38,7 @@ are human-scale; fact-scale output is line-oriented ``df.write.json``.
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -187,9 +197,16 @@ def run_export(
 ) -> dict[str, DataFrame]:
     """The ``npm run export [module] [ids-file]`` surface (app.js:11-39).
 
-    ``modules=None`` runs all four in the reference's order; a subset runs
-    just those (upstream deps are computed on demand, not read from prior
-    runs). ``ids`` narrows every selected module — the resume path.
+    ``modules=None`` runs all four; a subset runs just those (upstream deps
+    are computed on demand, not read from prior runs). ``ids`` narrows
+    every selected module — the resume path. The selected modules run
+    concurrently, one thread each (see the module docstring for why that
+    is safe), and the result is ``{module: DataFrame}`` in ``MODULES``
+    order. If modules fail, the exception of the first failing one in
+    ``MODULES`` order is raised, after every module has finished, so no
+    export thread outlives the call. Spark local properties the caller
+    set (job group, scheduler pool) are per thread and do not reach the
+    module threads.
     The locale / HTTP knobs mirror ExportConfig (the reference's
     ``guard.n(2)`` / 60 s / 1-retry constants) and are threaded through
     here — config values must never be silently ignored.
@@ -198,20 +215,19 @@ def run_export(
     unknown = set(selected) - set(MODULES)
     if unknown:
         raise ValueError(f"unknown modules: {sorted(unknown)} (valid: {MODULES})")
-    out: dict[str, DataFrame] = {}
-    for m in MODULES:
-        if m not in selected:
-            continue
-        if m == "assets":
-            out[m] = export_assets(
-                cat, data_dir, ids, fetch=fetch,
-                parallelism=asset_parallelism,
-                timeout=http_timeout_s, retries=http_retries,
-            )
-        elif m == "authors":
-            out[m] = export_authors(cat, data_dir, ids, locale=locale)
-        elif m == "categories":
-            out[m] = export_categories(cat, data_dir, ids, locale=locale)
-        elif m == "posts":
-            out[m] = export_posts(cat, data_dir, ids, locale=locale)
-    return out
+    # names resolve at call time, so a wrapped or patched export_* is the one run
+    exports: dict[str, Callable[[], DataFrame]] = {
+        "assets": lambda: export_assets(
+            cat, data_dir, ids, fetch=fetch, parallelism=asset_parallelism,
+            timeout=http_timeout_s, retries=http_retries,
+        ),
+        "authors": lambda: export_authors(cat, data_dir, ids, locale=locale),
+        "categories": lambda: export_categories(cat, data_dir, ids, locale=locale),
+        "posts": lambda: export_posts(cat, data_dir, ids, locale=locale),
+    }
+    chosen = [m for m in MODULES if m in selected]
+    # leaving the block joins every thread, so a failure is raised only once
+    # all modules have finished
+    with ThreadPoolExecutor(max_workers=len(chosen), thread_name_prefix="export") as pool:
+        futures = {m: pool.submit(exports[m]) for m in chosen}
+    return {m: f.result() for m, f in futures.items()}

@@ -17,16 +17,32 @@ Two physical backends:
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def parquet_table(path: str) -> Callable[[SparkSession], DataFrame]:
+    """Parquet loader that infers the schema once. ``spark.read.parquet``
+    submits a footer-reading Spark job per call; the first load keeps its
+    schema and later loads pass it to ``spark.read.schema``, which runs no
+    job. Every call still returns a fresh DataFrame (builders self-join
+    ``posts``). The lock makes concurrent first loads infer exactly once."""
+    schema: T.StructType | None = None
+    lock = threading.Lock()
+
     def load(spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(path)
+        nonlocal schema
+        with lock:
+            if schema is None:
+                df = spark.read.parquet(path)
+                schema = df.schema
+                return df
+        return spark.read.schema(schema).parquet(path)
 
     return load
 
